@@ -737,9 +737,9 @@ object RelationalQueries {
     },
 
     // C37b: the same upsert-LWW semantics run THROUGH the manifest
-    // table format (the log-committed MERGE implementation behind the
-    // TableFormat seam): ingest v1 of every document, re-merge v2 of
-    // the evens (copy-on-write rewrite found from log metadata),
+    // table format (the chunk store's log-committed MERGE): ingest v1
+    // of every document, re-merge v2 of the evens (copy-on-write
+    // rewrite found from log metadata),
     // DELETE FROM every 17th, then read the snapshot back. The oracle
     // recomputes the final state relationally, so merge/delete/read
     // through the log must agree row-for-row. ManifestFormatSpec

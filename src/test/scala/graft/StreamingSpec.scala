@@ -43,9 +43,12 @@ class StreamingSpec extends SparkSpec {
     runOnce(ckpt.toString + "/2")
     assert(store.read().count() == n1)
 
-    // delete a file upstream → chunks disappear on the next batch
+    // delete a file upstream → chunks disappear at the next
+    // maintenance-cadence delete detection
     Files.delete(in.resolve("b.txt"))
     runOnce(ckpt.toString + "/3")
+    assert(store.read().select("document_url").distinct().count() == 2)
+    StreamingIngest.detectDeletes(spark, in.toString, store)
     val urls = store.read().select("document_url").distinct()
       .collect().map(_.getString(0)).toSeq
     assert(urls.length == 1 && urls.head.endsWith("a.txt"))
